@@ -24,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 # crawl benchmark size (fixed across sf for comparability; scaled by env)
 CRAWL_SCALE = float(os.environ.get("ETLPY_BENCH_CRAWL_SCALE", "1.0"))
@@ -114,11 +114,14 @@ def bench_crawl_steady(spark) -> dict:
 
 
 def warmup(spark) -> None:
-    """Untimed warm-up: excludes first-use costs — JVM/codegen warm-up,
-    spawning $CPUS python workers each importing pandas+numpy+pyarrow, the
-    parquet writer init — so the timed section measures the engine, not
-    process bootstrap (BENCH/BASELINE.md excludes cold-start the same way;
-    on this host the cold first Arrow-UDF stage alone can cost 10-30 s).
+    """Untimed warm-up: pays the one-time first-use costs — JVM start and
+    codegen, forking $CPUS python workers that each import
+    pandas+numpy+pyarrow once, parquet writer init — so the timed section
+    measures the engine, not process bootstrap (BENCH/BASELINE.md excludes
+    cold start the same way). It cannot hide per-TASK costs: every Python
+    task still pays the worker's task setup, which is why the session's
+    daemon keeps that setup from re-reading pyspark.zip
+    (etlpy_spark/spark_daemon.py).
     A mini end-to-end crawl touches every machinery class the timed
     workloads use: pandas UDF, applyInPandas, mapInPandas, window rank,
     broadcast join, shuffle agg, parquet read/write."""

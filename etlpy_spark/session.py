@@ -59,15 +59,13 @@ def get_spark(
             b.config("spark.io.compression.codec", codec)
             .config("spark.sql.parquet.compression.codec", codec)
         )
-    if os.environ.get("ETLPY_DAEMON_PRELOAD", "0") == "1":
-        # OPT-IN: fork Python workers from a daemon that has already
-        # imported numpy/pandas/pyarrow. Measured NIL locally (the Arrow
-        # serializer imports pandas before any UDF body runs) — it only
-        # shaves first-wave latency on a real cluster, and on a cluster
-        # where the package ships solely via --py-files the preload module
-        # may not be importable at daemon launch, failing workers with an
-        # obscure daemon error. Hence default-off.
-        b = b.config("spark.python.daemon.module", "etlpy_spark.spark_daemon")
+    # Fork Python workers from a daemon that stops every task from
+    # re-reading pyspark.zip's central directory (etlpy_spark/spark_daemon.py;
+    # ~0.1-0.25 s of worker CPU per task on Python 3.11). The daemon imports
+    # this package at launch, so it relies on the PYTHONPATH export above
+    # (tools/submit_crawl.py, the --py-files entrypoint, builds its own
+    # session and keeps the stock daemon).
+    b = b.config("spark.python.daemon.module", "etlpy_spark.spark_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
